@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Sink operators (SURVEY §2.2). HBase/Redis/ES cluster fidelity is a
   * non-goal (§7.3): the external stores become (a) a keyed parquet "metric
@@ -88,11 +89,13 @@ object Sinks {
     * named in the updates. Untouched `day=` directories are never read,
     * rewritten, or even listed, so a long-lived store costs O(touched days)
     * per trigger, not O(history) — the flush-only-what-changed behavior of
-    * the reference's per-window HBase puts.
+    * the reference's per-window HBase puts. Returns the touched days,
+    * leaves a caller's cache of `updates` in place, and writes one file
+    * per touched `day=` directory.
     */
   def upsertMetricStorePartitioned(spark: SparkSession, path: String,
                                    updates: DataFrame, keyCols: Seq[String],
-                                   dayCol: String = "day"): Unit = {
+                                   dayCol: String = "day"): Seq[Long] = {
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // __old lives OUTSIDE the store root: a day=<d>__old dir inside it
@@ -104,11 +107,12 @@ object Sinks {
           new org.apache.hadoop.fs.Path(hp, st.getPath.getName)))
       fs.delete(oldRoot, true)
     }
-    val u = updates.persist()
+    val owned = updates.storageLevel == StorageLevel.NONE
+    val u = if (owned) updates.persist() else updates
     try {
       val days = u.select(col(dayCol)).distinct().collect()
-        .map(_.getLong(0))
-      if (days.isEmpty) return
+        .map(_.getLong(0)).toSeq
+      if (days.isEmpty) return days
       val existingDirs = days
         .map(d => new org.apache.hadoop.fs.Path(path, s"$dayCol=$d"))
         .filter(fs.exists).map(_.toString)
@@ -122,7 +126,7 @@ object Sinks {
       // materialize into a temp dir first (the merge plan reads the very
       // files being replaced), then swap only the touched partition dirs
       val tmp = new org.apache.hadoop.fs.Path(path + "__tmp")
-      merged.write.mode(SaveMode.Overwrite)
+      merged.repartition(col(dayCol)).write.mode(SaveMode.Overwrite)
         .partitionBy(dayCol).parquet(tmp.toString)
       fs.mkdirs(hp)
       days.foreach { d =>
@@ -144,7 +148,8 @@ object Sinks {
       }
       fs.delete(tmp, true)
       fs.delete(oldRoot, true)
-    } finally u.unpersist()
+      days
+    } finally if (owned) u.unpersist()
   }
 
   /** K4/K5/K6 abstraction: keyed writes with DEL→RPUSH→EXPIRE (list) or

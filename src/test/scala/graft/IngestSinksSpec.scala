@@ -103,6 +103,36 @@ class IngestSinksSpec extends SparkSpecBase {
     assert(!fs.exists(new Path(pdir + "__old")))
   }
 
+  test("K7: partitioned upsert keeps the caller's cache, releases its own, " +
+    "returns the touched days and writes one file per day") {
+    import org.apache.spark.storage.StorageLevel
+    val dir = Files.createTempDirectory("graft_msc").toString + "/store"
+    val callers = (1 to 40).map(i => (s"k$i", 1L + i % 2, i.toLong))
+      .toDF("key", "day", "pv").repartition(4).persist()
+    try {
+      val days = Sinks.upsertMetricStorePartitioned(spark, dir, callers,
+        Seq("key", "day"))
+      assert(days.sorted == Seq(1L, 2L))
+      assert(callers.storageLevel != StorageLevel.NONE,
+        "the sink released a cache the caller made")
+    } finally callers.unpersist()
+    val own = Seq(("k1", 2L, 9L)).toDF("key", "day", "pv")
+    assert(Sinks.upsertMetricStorePartitioned(spark, dir, own,
+      Seq("key", "day")) == Seq(2L))
+    assert(own.storageLevel == StorageLevel.NONE,
+      "the sink left its own cache behind")
+    assert(Sinks.upsertMetricStorePartitioned(spark, dir,
+      own.filter(lit(false)), Seq("key", "day")).isEmpty)
+    val got = spark.read.parquet(dir).select("key", "day", "pv")
+      .as[(String, Long, Long)].collect()
+    assert(got.length == 40 && got.contains(("k1", 2L, 9L)))
+    Seq(1, 2).foreach { d =>
+      val parts = new java.io.File(s"$dir/day=$d").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(parts.length == 1, s"day=$d holds ${parts.length} files")
+    }
+  }
+
   test("K4: list publishing honors the Redis contract through InMemoryKv") {
     val kv = new Sinks.InMemoryKv
     val df = Seq(("item1", Seq("a:0.9", "b:0.8"))).toDF("key", "values")

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -193,6 +194,127 @@ class StreamingSpec extends SparkSpecBase {
       .filter(col("granularity") === "1h")
       .select("pv", "uv").as[(Long, Long)].head()
     assert(hour == ((4L, 3L)), s"pv/uv: $hour") // 4 events, 3 distinct users
+  }
+
+  /** Reference form of the coarse rollups: one select and one `group`
+    * per granularity, unioned — four scans and four shuffles. */
+  private def perGranularity(fiveMin: DataFrame, carry: String*)(
+      group: DataFrame => DataFrame): DataFrame =
+    StreamingDashboard.Granularities.map { case (name, g) =>
+      val offset = if (name == "1d") StreamingDashboard.DayOffsetMs else 0L
+      group(fiveMin.select(Seq(col("key"), lit(name).as("granularity"),
+        StreamingDashboard.floorWindow(col("window_start_ms"), g, offset)
+          .as("window_start_ms")) ++ carry.map(col): _*))
+    }.reduce(_ unionByName _)
+
+  test("T3 path equivalence: the one-shuffle rollup, sketch rollup and " +
+    "touched-window set equal the four-branch union, pre-epoch and across " +
+    "a UTC+8 midnight") {
+    val keys = Seq("key", "granularity", "window_start_ms")
+    val midnight = 1704124800000L // 2024-01-01 16:00 UTC = 00:00 UTC+8
+    val raw = Seq(
+      ("a", midnight - 600000L, 1L), ("a", midnight - 1L, 2L),
+      ("a", midnight, 1L), ("a", midnight + 180000L, 3L),
+      ("b", midnight - 1L, 4L), ("b", midnight + 3660000L, 4L),
+      ("c", -1L, 5L), ("c", -300001L, 6L), ("c", -28800001L, 5L),
+      ("c", -28800000L, 7L), ("b", -172799877L, 8L)
+    ).toDF("key", "ms", "user_id")
+    val fine = raw.groupBy(col("key"),
+        StreamingDashboard.floorWindow(col("ms"), 300000L, 0L)
+          .as("window_start_ms"))
+      .agg(count(lit(1)).as("pv"), hll_sketch_agg(col("user_id"))
+        .as("uv_sketch"))
+    def same(got: DataFrame, ref: DataFrame, what: String): Unit = {
+      assert(got.columns.toSeq == ref.columns.toSeq, what)
+      val g = got.collect().map(_.toString).sorted.toSeq
+      val r = ref.collect().map(_.toString).sorted.toSeq
+      assert(g == r, s"$what:\n$g\nvs\n$r")
+    }
+    Seq(fine, fine.filter(lit(false))).foreach { f =>
+      val pvOnly = f.drop("uv_sketch")
+      same(StreamingDashboard.rollup(pvOnly),
+        perGranularity(pvOnly, "pv")(
+          _.groupBy(keys.map(col): _*).agg(sum("pv").as("pv"))), "rollup")
+      same(StreamingDashboard.rollupSketch(f),
+        perGranularity(f, "pv", "uv_sketch")(
+          _.groupBy(keys.map(col): _*).agg(sum("pv").as("pv"),
+            hll_sketch_estimate(hll_union_agg(col("uv_sketch"))).as("uv"))),
+        "rollupSketch")
+      same(StreamingDashboard.touchedCoarseWindows(f),
+        perGranularity(f)(identity).distinct(), "touchedCoarseWindows")
+    }
+    // the input really spans two UTC+8 days on each side of the epoch
+    val days = StreamingDashboard.rollup(fine.drop("uv_sketch"))
+      .filter(col("granularity") === "1d").select("window_start_ms")
+      .as[Long].collect().toSet
+    assert(Set(midnight - 86400000L, midnight, -28800000L - 86400000L,
+      -28800000L).subsetOf(days), s"1d windows: $days")
+  }
+
+  test("T5 work lock: a runSketch trigger computes its micro-batch once " +
+    "and scans the fine store once, into one exchange") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler._
+    implicit val s = spark
+    val dir = Files.createTempDirectory("graft_lock").toString
+    val mem = MemoryStream[(Timestamp, Long, String)]
+    mem.addData((ts(0), 1L, "a"), (ts(3), 2L, "b"), (ts(7), 1L, "a"),
+      (ts(22), 3L, "c"), (ts(41), 2L, "a"))
+    // completed stages of the stream's jobs: (batch id, RDD names, names
+    // of the SQL metrics the stage's tasks updated, shuffle records
+    // written). A stage reading a cache still lists the RDDs behind it,
+    // so running the stateful operator shows as its state-row metric.
+    val batchOf = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, Seq[String], Set[String], Long)]()
+    val fence = "graft-work-lock-fence"
+    @volatile var fenced = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        p.flatMap(q => Option(q.getProperty("streaming.sql.batchId")))
+          .foreach(b => e.stageIds.foreach(batchOf.put(_, b)))
+        if (p.exists(_.getProperty("spark.jobGroup.id") == fence))
+          fenced = true
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        Option(batchOf.get(i.stageId)).foreach(b => stages.add((b,
+          i.rddInfos.map(_.name).toSeq,
+          i.accumulables.values.flatMap(_.name).toSet,
+          i.taskMetrics.shuffleWriteMetrics.recordsWritten)))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = StreamingDashboard.runSketch(
+          mem.toDF().toDF("ts", "user_id", "key"), s"$dir/store",
+          s"$dir/ckpt", trigger = Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      // listener events arrive in order: once this job is seen, every
+      // stage of the stream before it has been delivered
+      spark.sparkContext.setJobGroup(fence, fence)
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!fenced && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(fenced)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val all = stages.asScala.toSeq
+    assert(all.nonEmpty)
+    all.groupBy(_._1).foreach { case (b, ss) =>
+      val stateful = ss.count(_._3.contains("number of total state rows"))
+      assert(stateful == 1,
+        s"batch $b ran the stateful aggregation stage $stateful times")
+    }
+    val scans = all.filter(_._2.contains("FileScanRDD"))
+    assert(scans.size == 1, s"fine store scanned by ${scans.size} stages")
+    assert(scans.head._4 > 0, "the fine-store scan must feed an exchange")
+    val hour = spark.read.parquet(s"$dir/store/coarse")
+      .filter(col("granularity") === "1h")
+      .select("key", "pv", "uv").as[(String, Long, Long)].collect().toSet
+    assert(hour == Set(("a", 3L, 2L), ("b", 1L, 1L), ("c", 1L, 1L)),
+      s"key/pv/uv: $hour")
   }
 
   test("T13 deterministic registers: streamed per-batch HLL store merges " +
